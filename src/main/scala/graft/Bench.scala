@@ -1,16 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSpark.session()
     // untimed warmup: session/codegen/scan-reader initialization must not
     // be attributed to whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -18,7 +10,7 @@ object Bench {
     // timed warm:<family> entries: shared caches (extraction run,
     // shingles, LSH pairs, dup groups, embedding buckets) materialize
     // HERE, attributed explicitly — per-query numbers then measure the
-    // query, not whichever one ran first in map order
+    // query, not whichever one ran first in registry order
     val warm = SparkEntry.warmFamilies(spark, sfDir)
     // best-of-2 per query (r4 lesson: a single slow host window inflated
     // 45/48 BENCH numbers 3-10x and corrupted the round's record) — both
@@ -26,9 +18,8 @@ object Bench {
     // per-query value is the min. Warm families run ONCE by design:
     // they time one-time cache materialization, which a second pass
     // would measure as a no-op
-    val names = SparkEntry.queries.toSeq
     val passes = (1 to 2).map { _ =>
-      names.map { case (name, fn) => SparkEntry.timed(name) { fn(spark, sfDir).count() } }
+      SparkEntry.queries.map(q => SparkEntry.timed(q.name) { q.build(spark, sfDir).count() })
     }
     // min over NON-FAILED passes only: a fast failure must never become
     // the headline number when a successful measurement exists (the
@@ -42,17 +33,17 @@ object Bench {
       (k, v, f1 || f2)
     }
     val results = warm ++ best
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val passJson = passes.map(p =>
-      p.map { case (k, v, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}"))
-      .mkString("[", ",", "]")
+    def secsJson(rs: Seq[(String, Double, Boolean)]) =
+      rs.map { case (k, v, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // failures are machine-readable, not stderr-only: a fast failure must
-    // never read as a fast query to a consumer comparing BENCH rounds
-    val failed = results.collect { case (k, _, true) => "\"" + k + "\"" }
+    // never read as a fast query to a consumer comparing BENCH rounds —
+    // in the headline and in each pass
+    def failedJson(rs: Seq[(String, Double, Boolean)]) =
+      rs.collect { case (k, _, true) => "\"" + k + "\"" }.mkString("[", ",", "]")
+    val passJson = passes.map(p => s"""{"queries":${secsJson(p)},"failed":${failedJson(p)}}""")
       .mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passJson,"failed":$failed,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${secsJson(results)},"passes":$passJson,"failed":${failedJson(results)},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

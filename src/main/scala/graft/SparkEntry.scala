@@ -3,7 +3,7 @@ package graft
 import graft.model.{ExtractedDoc, RawDoc}
 import graft.pipeline.ExtractionPipeline
 import graft.sources.DocGen
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -28,47 +28,30 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
-  /** The fused pipeline output, persisted once per (session, sfDir): ten
-    * x_* queries project different columns of the SAME extraction run —
-    * recomputing the full pipeline per query would be a 10× waste in
-    * Verify/Bench (and in any real consumer reading several facets).
+  /** A fused-pipeline run over one `RawDoc` source, persisted once per
+    * (session, sfDir): the x_* queries of a corpus project different
+    * columns of the SAME extraction run — recomputing the full pipeline
+    * per query would be a 10× waste in Verify/Bench (and in any real
+    * consumer reading several facets).
     */
-  private val extractedCache = new graft.util.SessionCache[Dataset[ExtractedDoc]]
-
-  private def extracted(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
-    extractedCache.getOrElseUpdate(s, dir) {
-      val ds = ExtractionPipeline.run(s, DocGen.rawDocs(s, dir))
-      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ds
+  private def persistedRun(source: (SparkSession, String) => Dataset[RawDoc])
+      : (SparkSession, String) => Dataset[ExtractedDoc] = {
+    val cache = new graft.util.SessionCache[Dataset[ExtractedDoc]]
+    (s, dir) => cache.getOrElseUpdate(s, dir) {
+      ExtractionPipeline.run(s, source(s, dir))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
+  }
 
-  /** F13 office corpus — a second fused-pipeline run over the OOXML
-    * synthesis of the same documents table (lighter than the main run:
-    * no HTML parse), persisted per (session, dir).
+  private val extracted = persistedRun(DocGen.rawDocs)
+
+  /** F13 office corpus: the OOXML synthesis of the same documents table
+    * (lighter than the main run: no HTML parse).
     */
-  private val officeCache = new graft.util.SessionCache[Dataset[ExtractedDoc]]
+  private val officeExtracted = persistedRun(DocGen.officeRawDocs)
 
-  private def officeExtracted(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
-    officeCache.getOrElseUpdate(s, dir) {
-      val ds = ExtractionPipeline.run(s, DocGen.officeRawDocs(s, dir))
-      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ds
-    }
-
-  /** F12/F15 aux corpus — csv + unknown-kind payloads through the same
-    * fused pipeline (DocGen.auxRawDocs), persisted per (session, dir).
-    */
-  private val auxCache = new graft.util.SessionCache[Dataset[ExtractedDoc]]
-
-  private def auxExtracted(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
-    auxCache.getOrElseUpdate(s, dir) {
-      val ds = ExtractionPipeline.run(s, DocGen.auxRawDocs(s, dir))
-      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ds
-    }
+  /** F12/F15 aux corpus: csv + unknown-kind payloads. */
+  private val auxExtracted = persistedRun(DocGen.auxRawDocs)
 
   /** Gazetteer realism tier: the full pipeline re-run under a
     * 430k-pattern corpus bundle (the reference's name-corpus scale,
@@ -165,7 +148,7 @@ object SparkEntry {
     // so filter the cached full extraction instead of re-running it
     extracted(s, dir).filter(kindCol(kind))
 
-  /** The two shared facet projections. `Dataset[_]` (not overloads —
+  /** The span and entity facet projections. `Dataset[_]` (not overloads —
     * Dataset[ExtractedDoc] and DataFrame share an erasure) so the typed
     * extraction caches and the streamed replay DataFrame all project
     * through ONE definition: five facets gate on the same oracle shape,
@@ -182,6 +165,76 @@ object SparkEntry {
       .select(col("doc_id"), col("e.type").as("type"), col("e.value").as("value"),
         col("e.start").as("start"), col("e.end").as("end"))
       .orderBy(col("doc_id"), col("start"), col("type"))
+
+  /** The per-doc facets below each back an all-modes query AND its
+    * hash-gated `_core` twin — the same projection under one more
+    * pushed-down predicate (`nonPdfCol`), so the two cannot drift.
+    */
+  private def canonicalOf(ds: Dataset[_]): DataFrame =
+    ds.select(col("doc_id"), explode(col("canonical_entities")).as("c"))
+      .select(col("doc_id"), col("c.id").as("id"), col("c.type").as("type"),
+        col("c.normalized").as("normalized"), col("c.count").as("count"))
+      .orderBy(col("doc_id"), col("id"))
+
+  /** `within` orders a doc's facts: by type for the hash-gated facets,
+    * by mention offset (`f.start`, resolved below the projection) for
+    * x_facts.
+    */
+  private def factsOf(ds: Dataset[_], within: Column = col("fact_type")): DataFrame =
+    ds.select(col("doc_id"), explode(col("facts")).as("f"))
+      .select(col("doc_id"), col("f.fact_type").as("fact_type"),
+        col("f.subject").as("subject"), col("f.predicate").as("predicate"),
+        col("f.object").as("object"), col("f.confidence").as("confidence"),
+        col("f.actionable").as("actionable"))
+      .orderBy(col("doc_id"), within)
+
+  private def factSummaryOf(ds: Dataset[_]): DataFrame = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    // select BEFORE the typed map: the summary reads only (doc_id,
+    // facts), so let the cache scan prune the other facet columns
+    ds.select(col("doc_id"), col("facts"))
+      .as[(String, Seq[graft.model.Fact])]
+      .map { case (id, facts) =>
+        val sm = graft.facts.SpoExtractor.summarize(facts)
+        (id, sm.total_facts.toLong, sm.actionable_facts.toLong,
+          sm.fact_types.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(","))
+      }
+      .toDF("doc_id", "total_facts", "actionable_facts", "fact_types")
+      .orderBy(col("doc_id"))
+  }
+
+  private def normalizedOf(ds: Dataset[_]): DataFrame = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    // N11 global replacement + N12 stats on the pipeline's clean text;
+    // only (doc_id, span texts, entities) are read — prune the rest
+    ds.select(col("doc_id"), col("spans.text").as("texts"), col("entities"))
+      .as[(String, Seq[String], Seq[graft.model.EntityMention])]
+      .map { case (id, texts, entities) =>
+        val clean = graft.extract.Core8Extractor.truncate(
+          graft.extract.Core8Extractor.cleanFormatting(texts.mkString("\n")))
+        val r = graft.normalize.Normalizer.run(clean, entities)
+        (id, r.mentionCount.toLong, r.canonicalCount.toLong, r.reductionPct,
+          r.normalizedText.length.toLong)
+      }
+      .toDF("doc_id", "mentions", "canonical", "reduction_pct", "norm_len")
+      .orderBy(col("doc_id"))
+  }
+
+  /** Length and md5 of one rendered output per doc (`<prefix>_len`,
+    * `<prefix>_md5`): the O1 markdown / O2 knowledge-JSON byte gates.
+    */
+  private def digestOf(ds: Dataset[ExtractedDoc], render: ExtractedDoc => String,
+      prefix: String): DataFrame = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    ds.map(d => (d.doc_id, render(d)))
+      .toDF("doc_id", "body")
+      .select(col("doc_id"), length(col("body")).as(s"${prefix}_len"),
+        md5(col("body")).as(s"${prefix}_md5"))
+      .orderBy(col("doc_id"))
+  }
 
   /** Flagship: full fused extraction over the interleaved corpus at
     * sf0.001 — every stage exercised, spans exploded.
@@ -211,7 +264,7 @@ object SparkEntry {
     * dependency order. Bench runs these FIRST and reports them as
     * explicit `warm:<family>` entries: the shared materialization cost
     * stays visible in the total but is no longer attributed to
-    * whichever family query happens to run first in map order — that
+    * whichever family query happens to run first in registry order — that
     * attribution made per-query BENCH deltas incomparable across
     * rounds.
     */
@@ -235,11 +288,33 @@ object SparkEntry {
       timed("warm:centroids") { graft.sim.Similarity.warmCentroids(s, dir) })
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- extraction engine (rows-only checks; golden specs in sbt test)
-    "x_html_spans" -> ((s, dir) => spansOf(extractedOfKind(s, dir, "html"))),
-    "x_pdf_spans" -> ((s, dir) => spansOf(extractedOfKind(s, dir, "pdf_blocks"))),
-    "x_text_spans" -> ((s, dir) => spansOf(extractedOfKind(s, dir, "text"))),
+  /** One driver query: `build` computes its rows, and `oracle`, when
+    * present, is the DuckDB SQL the driver hash-compares them against.
+    * A query without an oracle is the all-modes twin of a hash-gated
+    * `_core` query (RegistrySpec holds the registry to that).
+    */
+  final case class Query(name: String, build: (SparkSession, String) => DataFrame,
+      oracle: Option[String])
+
+  private def gated(name: String, oracle: String)(build: (SparkSession, String) => DataFrame) =
+    Query(name, build, Some(oracle))
+
+  private def rowsOnly(name: String)(build: (SparkSession, String) => DataFrame) =
+    Query(name, build, None)
+
+  /** The query registry Verify, Bench and PlanAudit iterate, in run
+    * order. The x_* oracles reconstruct the full span sequences, facets,
+    * flags and rejects as DuckDB arithmetic over the same documents
+    * table (see OracleSql docSynthCte).
+    */
+  val queries: Seq[Query] = Seq(
+    // ---- extraction engine
+    gated("x_html_spans", OracleSql.xHtmlSpans)((s, dir) =>
+      spansOf(extractedOfKind(s, dir, "html"))),
+    gated("x_pdf_spans", OracleSql.xPdfSpans)((s, dir) =>
+      spansOf(extractedOfKind(s, dir, "pdf_blocks"))),
+    gated("x_text_spans", OracleSql.xTextSpans)((s, dir) =>
+      spansOf(extractedOfKind(s, dir, "text"))),
     // streaming parity gates: the flagship extraction replayed through a
     // MemoryStream child session (the q18 pattern) must emit exactly the
     // batch rows — each oracle is the same DuckDB reconstruction that
@@ -247,31 +322,29 @@ object SparkEntry {
     // independent re-derivation rather than self-comparison. Spans gate
     // the conversion stages; entities additionally gate the
     // gazetteer-dependent stages (a span-only gate is bundle-blind)
-    "x_stream_spans" -> ((s, dir) => spansOf(streamExtracted(s, dir))),
-    "x_stream_entities" -> ((s, dir) =>
+    gated("x_stream_spans", OracleSql.xStreamSpans)((s, dir) =>
+      spansOf(streamExtracted(s, dir))),
+    gated("x_stream_entities", OracleSql.xEntitiesCore)((s, dir) =>
       entitiesOf(streamExtracted(s, dir).filter(nonPdfCol))),
-    "x_office_spans" -> ((s, dir) => spansOf(officeExtracted(s, dir))),
+    gated("x_office_spans", OracleSql.xOfficeSpans)((s, dir) =>
+      spansOf(officeExtracted(s, dir))),
     // F12 csv conversion + F15 universal fallback, each hash-gated by a
     // reconstruction oracle over the aux corpus (even ids = csv, odd =
     // unknown kind exercising all three fallback tiers)
-    "x_csv_spans" -> ((s, dir) =>
+    gated("x_csv_spans", OracleSql.xCsvSpans)((s, dir) =>
       spansOf(auxExtracted(s, dir).filter(docIdNum % 2 === 0))),
-    "x_fallback_spans" -> ((s, dir) =>
+    gated("x_fallback_spans", OracleSql.xFallbackSpans)((s, dir) =>
       spansOf(auxExtracted(s, dir).filter(docIdNum % 2 === 1))),
     // office corpus is chunk-free, so its downstream stages are exactly
     // reconstructable too — entity and fact hash-gates over the same run
-    "x_office_entities" -> ((s, dir) => entitiesOf(officeExtracted(s, dir))),
-    "x_office_facts" -> ((s, dir) =>
-      officeExtracted(s, dir).select(col("doc_id"), explode(col("facts")).as("f"))
-        .select(col("doc_id"), col("f.fact_type").as("fact_type"),
-          col("f.subject").as("subject"), col("f.predicate").as("predicate"),
-          col("f.object").as("object"), col("f.confidence").as("confidence"),
-          col("f.actionable").as("actionable"))
-        .orderBy(col("doc_id"), col("fact_type"))),
-    "x_content_flags" -> ((s, dir) =>
+    gated("x_office_entities", OracleSql.xOfficeEntities)((s, dir) =>
+      entitiesOf(officeExtracted(s, dir))),
+    gated("x_office_facts", OracleSql.xOfficeFacts)((s, dir) =>
+      factsOf(officeExtracted(s, dir))),
+    gated("x_content_flags", OracleSql.xContentFlags)((s, dir) =>
       extracted(s, dir).select(col("doc_id"), col("meta.content_detection.*"))
         .orderBy(col("doc_id"))),
-    "x_classify" -> ((s, dir) =>
+    gated("x_classify", OracleSql.xClassify)((s, dir) =>
       extracted(s, dir).select(col("doc_id"),
         col("meta.primary_domain").as("primary_domain"),
         col("meta.primary_domain_confidence").as("confidence"),
@@ -279,90 +352,61 @@ object SparkEntry {
         .orderBy(col("doc_id"))),
     // A5 keyword/topic/technical-score tagging (mvp-hyper-tagger):
     // document-local aggregations over the classify input string
-    "x_keywords" -> ((s, dir) =>
+    gated("x_keywords", OracleSql.xKeywords)((s, dir) =>
       graft.classify.Tagger.keywordRows(extracted(s, dir))),
-    "x_tags_meta" -> ((s, dir) =>
+    gated("x_tags_meta", OracleSql.xTagsMeta)((s, dir) =>
       graft.classify.Tagger.tagMeta(extracted(s, dir))),
-    "x_entities" -> ((s, dir) => entitiesOf(extracted(s, dir))),
+    rowsOnly("x_entities")((s, dir) => entitiesOf(extracted(s, dir))),
     // Core-8 extraction hash-gate over the exactly-reconstructable modes
     // (html + text; pdf chunking mangles entity surface — see oracle doc)
-    "x_entities_core" -> ((s, dir) =>
+    gated("x_entities_core", OracleSql.xEntitiesCore)((s, dir) =>
       entitiesOf(extracted(s, dir).filter(nonPdfCol))),
     // the same two gazetteer-sensitive facets under the 430k tier —
     // gated by the SAME oracle SQL (hermetic tier => identical results)
-    "x_big_entities_core" -> ((s, dir) =>
+    gated("x_big_entities_core", OracleSql.xEntitiesCore)((s, dir) =>
       entitiesOf(bigExtracted(s, dir).filter(nonPdfCol))),
-    "x_big_canonical_core" -> ((s, dir) =>
-      bigExtracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), explode(col("canonical_entities")).as("c"))
-        .select(col("doc_id"), col("c.id").as("id"), col("c.type").as("type"),
-          col("c.normalized").as("normalized"), col("c.count").as("count"))
-        .orderBy(col("doc_id"), col("id"))),
-    "x_canonical_entities" -> ((s, dir) =>
-      extracted(s, dir).select(col("doc_id"), explode(col("canonical_entities")).as("c"))
-        .select(col("doc_id"), col("c.id").as("id"), col("c.type").as("type"),
-          col("c.normalized").as("normalized"), col("c.count").as("count"))
-        .orderBy(col("doc_id"), col("id"))),
+    gated("x_big_canonical_core", OracleSql.xCanonicalCore)((s, dir) =>
+      canonicalOf(bigExtracted(s, dir).filter(nonPdfCol))),
+    rowsOnly("x_canonical_entities")((s, dir) => canonicalOf(extracted(s, dir))),
+    // normalization hash-gate over the reconstructable modes
+    gated("x_canonical_core", OracleSql.xCanonicalCore)((s, dir) =>
+      canonicalOf(extracted(s, dir).filter(nonPdfCol))),
     // A2 distributed extension: corpus-level canonical entity table
     // (one groupBy shuffle on (type, normalized); see CorpusCanonical)
-    "x_global_entities" -> ((s, dir) =>
+    rowsOnly("x_global_entities")((s, dir) =>
       graft.normalize.CorpusCanonical.globalEntities(extracted(s, dir))),
-    // the same corpus-level aggregation hash-gated over the
-    // reconstructable modes (see x_canonical_core)
-    "x_global_core" -> ((s, dir) =>
+    gated("x_global_core", OracleSql.xGlobalCore)((s, dir) =>
       graft.normalize.CorpusCanonical.globalEntities(
         extracted(s, dir).filter(nonPdfCol))),
     // A2 mention-context half: sentence-window co-occurrence edges
     // between canonical entities, corpus-aggregated (EntityEdges)
-    "x_entity_edges" -> ((s, dir) =>
+    rowsOnly("x_entity_edges")((s, dir) =>
       graft.normalize.EntityEdges.edges(extracted(s, dir))),
-    "x_entity_edges_core" -> ((s, dir) =>
+    gated("x_entity_edges_core", OracleSql.xEntityEdgesCore)((s, dir) =>
       graft.normalize.EntityEdges.edges(
         extracted(s, dir).filter(nonPdfCol))),
     // per-mention ±50-char context windows (the disambiguator's raw
     // material), hash-gated over the reconstructable modes
-    "x_mention_context_core" -> ((s, dir) =>
+    gated("x_mention_context_core", OracleSql.xMentionContextCore)((s, dir) =>
       graft.normalize.EntityEdges.mentionContexts(
         extracted(s, dir).filter(nonPdfCol))),
     // A2 resolution: per-doc evidence-scored person/org decisions over
     // the ambiguous canonical surfaces, plus the corpus rollup (built on
     // the unsorted rows — the groupBy would discard a sort anyway)
-    "x_disambig_core" -> ((s, dir) =>
+    gated("x_disambig_core", OracleSql.xDisambigCore)((s, dir) =>
       graft.normalize.Disambiguator.decisions(extracted(s, dir).filter(nonPdfCol))),
-    "x_disambig_global" -> ((s, dir) =>
+    gated("x_disambig_global", OracleSql.xDisambigGlobal)((s, dir) =>
       graft.normalize.Disambiguator.global(
         graft.normalize.Disambiguator.decisionRows(extracted(s, dir).filter(nonPdfCol)))),
-    // normalization hash-gate over the reconstructable modes
-    "x_canonical_core" -> ((s, dir) =>
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), explode(col("canonical_entities")).as("c"))
-        .select(col("doc_id"), col("c.id").as("id"), col("c.type").as("type"),
-          col("c.normalized").as("normalized"), col("c.count").as("count"))
-        .orderBy(col("doc_id"), col("id"))),
-    "x_facts" -> ((s, dir) =>
-      extracted(s, dir).select(col("doc_id"), explode(col("facts")).as("f"))
-        .select(col("doc_id"), col("f.fact_type").as("fact_type"),
-          col("f.subject").as("subject"), col("f.predicate").as("predicate"),
-          col("f.object").as("object"), col("f.confidence").as("confidence"),
-          col("f.actionable").as("actionable"))
-        .orderBy(col("doc_id"), col("f.start"))),
+    rowsOnly("x_facts")((s, dir) => factsOf(extracted(s, dir), col("f.start"))),
     // SPO fact hash-gate over the reconstructable modes (see x_entities_core)
-    "x_facts_core" -> ((s, dir) =>
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), explode(col("facts")).as("f"))
-        .select(col("doc_id"), col("f.fact_type").as("fact_type"),
-          col("f.subject").as("subject"), col("f.predicate").as("predicate"),
-          col("f.object").as("object"), col("f.confidence").as("confidence"),
-          col("f.actionable").as("actionable"))
-        .orderBy(col("doc_id"), col("fact_type"))),
+    gated("x_facts_core", OracleSql.xFactsCore)((s, dir) =>
+      factsOf(extracted(s, dir).filter(nonPdfCol))),
     // X2 typed-fact breadth shipped as X3 CONFIG rows: the same SPO
     // engine with the typedPatterns set installed, gating only the NEW
     // fact types (the builtin rows stay x_facts_core's gate). Runs over
     // the cached extraction's spans — same clean text as the pipeline.
-    "x_typed_facts_core" -> ((s, dir) => {
+    gated("x_typed_facts_core", OracleSql.xTypedFactsCore) { (s, dir) =>
       import s.implicits._
       extracted(s, dir)
         .filter(nonPdfCol)
@@ -379,132 +423,52 @@ object SparkEntry {
         .toDF("doc_id", "fact_type", "subject", "predicate", "object",
           "confidence", "actionable")
         .orderBy(col("doc_id"), col("fact_type"))
-    }),
-    "x_rejects" -> ((s, dir) =>
+    },
+    gated("x_rejects", OracleSql.xRejects)((s, dir) =>
       extracted(s, dir).filter(!col("success"))
         .select(col("doc_id"), col("error")).orderBy(col("doc_id"))),
     // E15 gap discovery + its distributed learning aggregation over the
     // reconstructable modes (disabled in the pipeline by default, like
     // the reference — exercised here as its own facet)
-    "x_discoveries_core" -> ((s, dir) =>
+    gated("x_discoveries_core", OracleSql.xDiscoveriesCore)((s, dir) =>
       graft.extract.GapDiscovery.discoverAll(
         extracted(s, dir).filter(nonPdfCol))
         .orderBy(col("doc_id"), col("start"))),
-    "x_discovery_learn_core" -> ((s, dir) =>
+    gated("x_discovery_learn_core", OracleSql.xDiscoveryLearnCore)((s, dir) =>
       graft.extract.GapDiscovery.learningCandidates(
         graft.extract.GapDiscovery.discoverAll(
           extracted(s, dir).filter(nonPdfCol)),
         threshold = 0.85, minDocs = 2)
         .orderBy(col("kind"), col("value"))),
-    "x_domain_entities" -> ((s, dir) =>
+    gated("x_domain_entities", OracleSql.xDomainEntities)((s, dir) =>
       extracted(s, dir)
         .select(col("doc_id"), explode(col("meta.domain_entities")).as("domain_entity"))
         .orderBy(col("doc_id"), col("domain_entity"))),
-    "x_fact_summary" -> ((s, dir) => {
-      import s.implicits._
-      // select BEFORE the typed map: the summary reads only (doc_id,
-      // facts), so let the cache scan prune the other facet columns
-      extracted(s, dir)
-        .select(col("doc_id"), col("facts"))
-        .as[(String, Seq[graft.model.Fact])]
-        .map { case (id, facts) =>
-          val sm = graft.facts.SpoExtractor.summarize(facts)
-          (id, sm.total_facts.toLong, sm.actionable_facts.toLong,
-            sm.fact_types.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(","))
-        }
-        .toDF("doc_id", "total_facts", "actionable_facts", "fact_types")
-        .orderBy(col("doc_id"))
-    }),
-    "x_normalized_text" -> ((s, dir) => {
-      import s.implicits._
-      // N11 global replacement + N12 stats on the pipeline's clean text;
-      // only (doc_id, span texts, entities) are read — prune the rest
-      extracted(s, dir)
-        .select(col("doc_id"), col("spans.text").as("texts"), col("entities"))
-        .as[(String, Seq[String], Seq[graft.model.EntityMention])]
-        .map { case (id, texts, entities) =>
-          val clean = graft.extract.Core8Extractor.truncate(
-            graft.extract.Core8Extractor.cleanFormatting(texts.mkString("\n")))
-          val r = graft.normalize.Normalizer.run(clean, entities)
-          (id, r.mentionCount.toLong, r.canonicalCount.toLong, r.reductionPct,
-            r.normalizedText.length.toLong)
-        }
-        .toDF("doc_id", "mentions", "canonical", "reduction_pct", "norm_len")
-        .orderBy(col("doc_id"))
-    }),
-    "x_fact_summary_core" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), col("facts"))
-        .as[(String, Seq[graft.model.Fact])]
-        .map { case (id, facts) =>
-          val sm = graft.facts.SpoExtractor.summarize(facts)
-          (id, sm.total_facts.toLong, sm.actionable_facts.toLong,
-            sm.fact_types.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(","))
-        }
-        .toDF("doc_id", "total_facts", "actionable_facts", "fact_types")
-        .orderBy(col("doc_id"))
-    }),
-    "x_normalized_core" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), col("spans.text").as("texts"), col("entities"))
-        .as[(String, Seq[String], Seq[graft.model.EntityMention])]
-        .map { case (id, texts, entities) =>
-          val clean = graft.extract.Core8Extractor.truncate(
-            graft.extract.Core8Extractor.cleanFormatting(texts.mkString("\n")))
-          val r = graft.normalize.Normalizer.run(clean, entities)
-          (id, r.mentionCount.toLong, r.canonicalCount.toLong, r.reductionPct,
-            r.normalizedText.length.toLong)
-        }
-        .toDF("doc_id", "mentions", "canonical", "reduction_pct", "norm_len")
-        .orderBy(col("doc_id"))
-    }),
-    "x_markdown" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .map(d => (d.doc_id, graft.output.Assembly.assembleMarkdown(d)))
-        .toDF("doc_id", "markdown")
-        .select(col("doc_id"), length(col("markdown")).as("md_len"),
-          md5(col("markdown")).as("md_md5"))
-        .orderBy(col("doc_id"))
-    }),
-    "x_knowledge_json" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .map(d => (d.doc_id, graft.output.Assembly.knowledgeJson(d)))
-        .toDF("doc_id", "knowledge")
-        .select(col("doc_id"), length(col("knowledge")).as("json_len"),
-          md5(col("knowledge")).as("json_md5"))
-        .orderBy(col("doc_id"))
-    }),
+    rowsOnly("x_fact_summary")((s, dir) => factSummaryOf(extracted(s, dir))),
+    gated("x_fact_summary_core", OracleSql.xFactSummaryCore)((s, dir) =>
+      factSummaryOf(extracted(s, dir).filter(nonPdfCol))),
+    rowsOnly("x_normalized_text")((s, dir) => normalizedOf(extracted(s, dir))),
+    gated("x_normalized_core", OracleSql.xNormalizedCore)((s, dir) =>
+      normalizedOf(extracted(s, dir).filter(nonPdfCol))),
+    rowsOnly("x_markdown")((s, dir) =>
+      digestOf(extracted(s, dir), graft.output.Assembly.assembleMarkdown, "md")),
     // byte-exact O1 serialization gate over the reconstructable modes
-    "x_markdown_core" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .map(d => (d.doc_id, graft.output.Assembly.assembleMarkdown(d)))
-        .toDF("doc_id", "markdown")
-        .select(col("doc_id"), length(col("markdown")).as("md_len"),
-          md5(col("markdown")).as("md_md5"))
-        .orderBy(col("doc_id"))
-    }),
+    gated("x_markdown_core", OracleSql.xMarkdownCore)((s, dir) =>
+      digestOf(extracted(s, dir).filter(nonPdfCol), graft.output.Assembly.assembleMarkdown, "md")),
+    rowsOnly("x_knowledge_json")((s, dir) =>
+      digestOf(extracted(s, dir), graft.output.Assembly.knowledgeJson, "json")),
     // byte-exact O2 serialization gate over the reconstructable modes
-    "x_knowledge_core" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .map(d => (d.doc_id, graft.output.Assembly.knowledgeJson(d)))
-        .toDF("doc_id", "knowledge")
-        .select(col("doc_id"), length(col("knowledge")).as("json_len"),
-          md5(col("knowledge")).as("json_md5"))
-        .orderBy(col("doc_id"))
-    }),
+    gated("x_knowledge_core", OracleSql.xKnowledgeCore)((s, dir) =>
+      digestOf(extracted(s, dir).filter(nonPdfCol), graft.output.Assembly.knowledgeJson, "json")),
 
-    // ---- relational coverage (DuckDB-verified)
-    "q1_agg" -> ((s, dir) => {
+    // ---- relational coverage
+    gated("q1_agg",
+      """SELECT l_returnflag, l_linestatus,
+        | round(sum(l_quantity), 2) AS sum_qty,
+        | round(sum(l_extendedprice), 2) AS sum_price,
+        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+        | count(*) AS n
+        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       s.read.parquet(s"$dir/lineitem.parquet")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -513,8 +477,12 @@ object SparkEntry {
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
           count(lit(1)).as("n"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-    "q2_join_topk" -> ((s, dir) => {
+    },
+    gated("q2_join_topk",
+      """SELECT c_custkey, c_mktsegment,
+        | round(sum(o_totalprice), 2) AS total_spent, count(*) AS n_orders
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1, 2 ORDER BY total_spent DESC, c_custkey LIMIT 10""".stripMargin) { (s, dir) =>
       val o = s.read.parquet(s"$dir/orders.parquet")
       val c = broadcast(s.read.parquet(s"$dir/customer.parquet"))
       o.join(c, o("o_custkey") === c("c_custkey"))
@@ -523,8 +491,15 @@ object SparkEntry {
           count(lit(1)).as("n_orders"))
         .orderBy(col("total_spent").desc, col("c_custkey"))
         .limit(10)
-    }),
-    "q3_multi_join" -> ((s, dir) => {
+    },
+    gated("q3_multi_join",
+      """SELECT n_name,
+        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       val li = s.read.parquet(s"$dir/lineitem.parquet")
       val o = s.read.parquet(s"$dir/orders.parquet")
       val c = s.read.parquet(s"$dir/customer.parquet")
@@ -535,8 +510,12 @@ object SparkEntry {
         .groupBy(col("n_name"))
         .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
         .orderBy(col("n_name"))
-    }),
-    "q4_window" -> ((s, dir) => {
+    },
+    gated("q4_window",
+      """SELECT o_custkey, rn, o_orderkey, price FROM (
+        | SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS price,
+        |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
+        | FROM orders) WHERE rn <= 2 ORDER BY o_custkey, rn""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val o = s.read.parquet(s"$dir/orders.parquet")
       val w = Window.partitionBy(col("o_custkey"))
@@ -546,182 +525,57 @@ object SparkEntry {
         .select(col("o_custkey"), col("rn"), col("o_orderkey"),
           round(col("o_totalprice"), 2).as("price"))
         .orderBy(col("o_custkey"), col("rn"))
-    }),
-    "q5_filter_distinct" -> ((s, dir) => {
+    },
+    gated("q5_filter_distinct",
+      """SELECT DISTINCT l_returnflag FROM lineitem
+        |WHERE l_discount > 0.05 AND l_quantity < 25 ORDER BY 1""".stripMargin) { (s, dir) =>
       s.read.parquet(s"$dir/lineitem.parquet")
         .filter(col("l_discount") > 0.05 && col("l_quantity") < 25)
         .select(col("l_returnflag")).distinct()
         .orderBy(col("l_returnflag"))
-    }),
-    "q6_events_agg" -> ((s, dir) => {
+    },
+    gated("q6_events_agg",
+      """SELECT event_type, date_trunc('day', ts) AS day,
+        | count(*) AS n, round(sum(value), 2) AS total
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       s.read.parquet(s"$dir/events.parquet")
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
         .orderBy(col("event_type"), col("day"))
-    }),
+    },
 
-    // ---- relational scale patterns (DuckDB-verified)
-    "q7_rollup" -> ((s, dir) => graft.relational.Relational.rollupAgg(s, dir)),
-    "q8_asof_join" -> ((s, dir) => graft.relational.Relational.asofJoin(s, dir)),
-    "q9_anti_join" -> ((s, dir) => graft.relational.Relational.antiJoin(s, dir)),
-    "q10_semi_join" -> ((s, dir) => graft.relational.Relational.semiJoin(s, dir)),
-    "q11_setops" -> ((s, dir) => graft.relational.Relational.setOps(s, dir)),
-    "q12_salted_agg" -> ((s, dir) => graft.relational.Relational.saltedAgg(s, dir)),
-    "q13_sessions" -> ((s, dir) => graft.relational.Relational.sessionize(s, dir)),
-    "q14_cube" -> ((s, dir) => graft.relational.Relational.cubeAgg(s, dir)),
-    // the full SQL surface: same engine, ANSI SQL text in, Catalyst plan
-    // out — views over the parquet tables, CTE + join + agg
-    "q17_sql_surface" -> ((s, dir) => {
-      s.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("li_v")
-      s.read.parquet(s"$dir/part.parquet").createOrReplaceTempView("part_v")
-      s.sql(
-        """WITH returned AS (
-          |  SELECT l_partkey, count(*) AS n_ret, round(sum(l_quantity), 2) AS qty
-          |  FROM li_v WHERE l_returnflag = 'R' GROUP BY l_partkey)
-          |SELECT p.p_type, count(*) AS n_parts,
-          |  sum(r.n_ret) AS n_returns, round(sum(r.qty), 2) AS total_qty
-          |FROM returned r JOIN part_v p ON p.p_partkey = r.l_partkey
-          |GROUP BY p.p_type ORDER BY p.p_type""".stripMargin)
-    }),
-    // the Structured Streaming transform run in batch mode — stream/batch
-    // parity is the point: one definition, both execution modes
-    "q16_windowed_events" -> ((s, dir) =>
-      graft.streaming.EventStream.windowedCounts(
-        s.read.parquet(s"$dir/events.parquet"))
-        .orderBy(col("window_start"), col("event_type"))),
-    "q15_percentiles" -> ((s, dir) => graft.relational.Relational.percentiles(s, dir)),
-    // stream/batch parity for SESSIONS (q13's streaming twin): the
-    // flatMapGroupsWithState transform replayed over a MemoryStream,
-    // gated against the same gaps-and-islands oracle
-    "q18_stream_sessions" -> ((s, dir) =>
-      graft.streaming.EventStream.sessionizeReplay(
-        s, s.read.parquet(s"$dir/events.parquet"))),
-
-    // ---- training-data text ops (DuckDB-verified formulas)
-    "t1_token_count" -> ((s, dir) => graft.textops.TextOps.tokenCount(s, dir)),
-    "t2_quality_score" -> ((s, dir) => graft.textops.TextOps.qualityScore(s, dir)),
-    "t3_lang_id" -> ((s, dir) => graft.textops.TextOps.langId(s, dir)),
-    "t4_fingerprint" -> ((s, dir) => graft.textops.TextOps.fingerprint(s, dir)),
-    "t5_dedup_exact" -> ((s, dir) => graft.textops.TextOps.dedupExact(s, dir)),
-    "t6_ngram_jaccard" -> ((s, dir) => graft.textops.TextOps.ngramJaccard(s, dir, 0.2)),
-    "t7_minhash_lsh" -> ((s, dir) => graft.textops.TextOps.minhashLsh(s, dir, 0.5)),
-    "t8_simhash" -> ((s, dir) => graft.textops.TextOps.simhash(s, dir)),
-    "t10_dup_groups" -> ((s, dir) => graft.textops.TextOps.dupGroups(s, dir)),
-    "t11_corpus_select" -> ((s, dir) => graft.textops.TextOps.corpusSelect(s, dir)),
-    "t12_lsh_recall" -> ((s, dir) => graft.textops.TextOps.lshRecall(s, dir)),
-    "t13_rolling_fp" -> ((s, dir) => graft.textops.TextOps.rollingFingerprint(s, dir)),
-    "t14_simhash_dedup" -> ((s, dir) => graft.textops.TextOps.simhashDedup(s, dir)),
-    "t15_simhash_groups" -> ((s, dir) => graft.textops.TextOps.simhashGroups(s, dir)),
-    // benchmark decontamination: n-gram membership of each train doc's
-    // shingles in the held-out slice's vocabulary (doc_id % 10 == 0)
-    "t16_contamination" -> ((s, dir) => graft.textops.TextOps.contamination(s, dir)),
-    // token-budget language balancing: deterministic hash-threshold
-    // down-sampling of dominant languages to an adaptive budget
-    "t17_token_budget" -> ((s, dir) => graft.textops.TextOps.tokenBudget(s, dir)),
-    // the composed end-to-end curation decision: quality + dedup +
-    // decontamination + balancing, every flag re-derived by the oracle
-    "t18_curation_funnel" -> ((s, dir) => graft.textops.TextOps.curationFunnel(s, dir)),
-    // dedup at ingest: the streamed keeper table must equal the batch
-    // group-by — min/count are arrival-order-insensitive, so the
-    // complete-mode sink state is deterministic
-    "t19_stream_dedup" -> ((s, dir) => graft.streaming.StreamDedup.dedupReplay(
-      s, graft.textops.TextOps.docs(s, dir))),
-    // the production state-BOUNDED variant: watermark horizon evicts
-    // fingerprint state — in-horizon dup dropped, beyond-horizon dup
-    // re-admitted; the emission-count vector gates both sides
-    "t20_stream_dedup_bounded" -> ((s, dir) => graft.streaming.StreamDedup.boundedReplay(
-      s, graft.textops.TextOps.docs(s, dir))),
-    // Gopher-style within-document repetition signals: the curation
-    // filter exact/near dedup cannot see (document-local, one scan)
-    "t21_repetition" -> ((s, dir) => graft.textops.TextOps.repetition(s, dir)),
-
-    // ---- multimodal media columns (binary payloads; DuckDB-verified)
-    "m1_media_stats" -> ((s, dir) => graft.media.MediaOps.mediaStats(s, dir)),
-    "m2_image_meta" -> ((s, dir) => graft.media.MediaOps.imageMeta(s, dir)),
-    "m3_frame_sample" -> ((s, dir) => graft.media.MediaOps.frameSample(s, dir)),
-    "m4_resize_plan" -> ((s, dir) => graft.media.MediaOps.resizePlan(s, dir)),
-    "m5_audio_features" -> ((s, dir) => graft.media.MediaOps.audioFeatures(s, dir)),
-
-    // ---- similarity search over embeddings (DuckDB-verified)
-    "s1_cosine_topk" -> ((s, dir) => graft.sim.Similarity.cosineTopK(s, dir, 10, 5)),
-    "s2_lsh_topk" -> ((s, dir) => graft.sim.Similarity.lshTopK(s, dir, 10, 5)),
-    "s3_label_centroids" -> ((s, dir) => graft.sim.Similarity.labelCentroids(s, dir)),
-    "s4_ivf_topk" -> ((s, dir) => graft.sim.Similarity.ivfTopK(s, dir, 10, 5)),
-    "s6_ivf_recall" -> ((s, dir) => graft.sim.Similarity.ivfRecall(s, dir, 10, 5)),
-    // the same measurement on the label-correlated clustered family:
-    // recall at fixed nprobe as a function of cluster purity (s6's
-    // near-uniform corpus is the probed-mass worst case)
-    "s8_ivf_recall_clustered" -> ((s, dir) =>
-      graft.sim.Similarity.ivfRecallClustered(s, dir, 10, 5)),
-    // int8 quantization with MEASURED reconstruction quality — the
-    // vector-payload memory-footprint path (codes 4x smaller; exact
-    // re-rank stays on the originals)
-    "s9_quantize_int8" -> ((s, dir) => graft.sim.Similarity.quantizeInt8(s, dir)),
-    "s7_lsh_ann_recall" -> ((s, dir) => graft.sim.Similarity.lshAnnRecall(s, dir, 10, 5)),
-    "t9_embedding_dedup" -> ((s, dir) => graft.sim.Similarity.embeddingDedup(s, dir, 0.40)),
-    "s5_embedding_groups" -> ((s, dir) => graft.sim.Similarity.embeddingGroups(s, dir, 0.40))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        | round(sum(l_quantity), 2) AS sum_qty,
-        | round(sum(l_extendedprice), 2) AS sum_price,
-        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        | count(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q2_join_topk" ->
-      """SELECT c_custkey, c_mktsegment,
-        | round(sum(o_totalprice), 2) AS total_spent, count(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1, 2 ORDER BY total_spent DESC, c_custkey LIMIT 10""".stripMargin,
-    "q3_multi_join" ->
-      """SELECT n_name,
-        | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q4_window" ->
-      """SELECT o_custkey, rn, o_orderkey, price FROM (
-        | SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS price,
-        |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn
-        | FROM orders) WHERE rn <= 2 ORDER BY o_custkey, rn""".stripMargin,
-    "q5_filter_distinct" ->
-      """SELECT DISTINCT l_returnflag FROM lineitem
-        |WHERE l_discount > 0.05 AND l_quantity < 25 ORDER BY 1""".stripMargin,
-    "q6_events_agg" ->
-      """SELECT event_type, date_trunc('day', ts) AS day,
-        | count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q7_rollup" ->
+    // ---- relational scale patterns
+    gated("q7_rollup",
       """SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS rf,
         | CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL' ELSE l_linestatus END AS ls,
         | round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY rf, ls""".stripMargin,
-    "q8_asof_join" ->
+        |ORDER BY rf, ls""".stripMargin)((s, dir) =>
+      graft.relational.Relational.rollupAgg(s, dir)),
+    gated("q8_asof_join",
       """SELECT e.event_id AS error_id, e.user_id, e.ts AS error_ts,
         | c.event_id AS last_click_id, c.ts AS last_click_ts,
         | date_diff('second', c.ts, e.ts) AS gap_s
         |FROM (SELECT * FROM events WHERE event_type = 'error') e
         |ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
         | ON e.user_id = c.user_id AND e.ts >= c.ts
-        |ORDER BY error_id""".stripMargin,
-    "q9_anti_join" ->
+        |ORDER BY error_id""".stripMargin)((s, dir) =>
+      graft.relational.Relational.asofJoin(s, dir)),
+    gated("q9_anti_join",
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "q10_semi_join" ->
+        |ORDER BY c_custkey""".stripMargin)((s, dir) =>
+      graft.relational.Relational.antiJoin(s, dir)),
+    gated("q10_semi_join",
       """SELECT p_brand, count(*) AS n_parts,
         | round(sum(p_retailprice), 2) AS retail_sum
         |FROM part
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |  WHERE l_partkey = p_partkey AND l_returnflag = 'R')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q11_setops" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)((s, dir) =>
+      graft.relational.Relational.semiJoin(s, dir)),
+    gated("q11_setops",
       """WITH large AS (SELECT p_brand FROM part WHERE p_size > 25),
         | cheap AS (SELECT p_brand FROM part WHERE p_retailprice < 1200.0)
         |SELECT p_brand, 'large_and_cheap' AS tag
@@ -729,12 +583,14 @@ object SparkEntry {
         |UNION ALL
         |SELECT p_brand, 'large_only' AS tag
         | FROM (SELECT p_brand FROM large EXCEPT SELECT p_brand FROM cheap)
-        |ORDER BY tag, p_brand""".stripMargin,
-    "q12_salted_agg" ->
+        |ORDER BY tag, p_brand""".stripMargin)((s, dir) =>
+      graft.relational.Relational.setOps(s, dir)),
+    gated("q12_salted_agg",
       """SELECT user_id, count(*) AS n_events,
         | sum(value::DECIMAL(18,2))::DOUBLE AS total_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q13_sessions" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)((s, dir) =>
+      graft.relational.Relational.saltedAgg(s, dir)),
+    gated("q13_sessions",
       """WITH o AS (SELECT user_id, ts, event_id,
         |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
         | FROM events),
@@ -746,22 +602,56 @@ object SparkEntry {
         |   ROWS UNBOUNDED PRECEDING)::BIGINT AS session_id FROM f)
         |SELECT user_id, session_id, count(*) AS n_events,
         | date_diff('second', min(ts), max(ts)) AS duration_s
-        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q14_cube" ->
+        |FROM g GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)((s, dir) =>
+      graft.relational.Relational.sessionize(s, dir)),
+    gated("q14_cube",
       """SELECT CASE WHEN GROUPING(o_orderstatus) = 1 THEN 'ALL' ELSE o_orderstatus END AS status,
         | CASE WHEN GROUPING(o_orderpriority) = 1 THEN 'ALL' ELSE o_orderpriority END AS priority,
         | count(*) AS n, round(sum(o_totalprice), 2) AS total
         |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "q17_sql_surface" ->
+        |ORDER BY status, priority""".stripMargin)((s, dir) =>
+      graft.relational.Relational.cubeAgg(s, dir)),
+    // the full SQL surface: same engine, ANSI SQL text in, Catalyst plan
+    // out — views over the parquet tables, CTE + join + agg
+    gated("q17_sql_surface",
       """WITH returned AS (
         |  SELECT l_partkey, count(*) AS n_ret, round(sum(l_quantity), 2) AS qty
         |  FROM lineitem WHERE l_returnflag = 'R' GROUP BY l_partkey)
         |SELECT p.p_type, count(*) AS n_parts,
         |  sum(r.n_ret)::BIGINT AS n_returns, round(sum(r.qty), 2) AS total_qty
         |FROM returned r JOIN part p ON p.p_partkey = r.l_partkey
-        |GROUP BY p.p_type ORDER BY p.p_type""".stripMargin,
-    "q18_stream_sessions" ->
+        |GROUP BY p.p_type ORDER BY p.p_type""".stripMargin) { (s, dir) =>
+      s.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("li_v")
+      s.read.parquet(s"$dir/part.parquet").createOrReplaceTempView("part_v")
+      s.sql(
+        """WITH returned AS (
+          |  SELECT l_partkey, count(*) AS n_ret, round(sum(l_quantity), 2) AS qty
+          |  FROM li_v WHERE l_returnflag = 'R' GROUP BY l_partkey)
+          |SELECT p.p_type, count(*) AS n_parts,
+          |  sum(r.n_ret) AS n_returns, round(sum(r.qty), 2) AS total_qty
+          |FROM returned r JOIN part_v p ON p.p_partkey = r.l_partkey
+          |GROUP BY p.p_type ORDER BY p.p_type""".stripMargin)
+    },
+    // the Structured Streaming transform run in batch mode — stream/batch
+    // parity is the point: one definition, both execution modes
+    gated("q16_windowed_events",
+      """SELECT date_trunc('hour', ts) AS window_start, event_type,
+        | count(*) AS n, round(sum(value), 2) AS total
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)((s, dir) =>
+      graft.streaming.EventStream.windowedCounts(
+        s.read.parquet(s"$dir/events.parquet"))
+        .orderBy(col("window_start"), col("event_type"))),
+    gated("q15_percentiles",
+      """SELECT l_returnflag,
+        | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
+        | round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
+        | round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)((s, dir) =>
+      graft.relational.Relational.percentiles(s, dir)),
+    // stream/batch parity for SESSIONS (q13's streaming twin): the
+    // flatMapGroupsWithState transform replayed over a MemoryStream,
+    // gated against the same gaps-and-islands oracle
+    gated("q18_stream_sessions",
       """WITH o AS (SELECT user_id, ts, event_id,
         |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
         | FROM events),
@@ -774,90 +664,106 @@ object SparkEntry {
         |SELECT user_id, count(*) AS n_events,
         | date_diff('second', min(ts), max(ts)) AS duration_s
         |FROM g GROUP BY user_id, session_id
-        |ORDER BY user_id, n_events, duration_s""".stripMargin,
-    "q16_windowed_events" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        | count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q15_percentiles" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
-        | round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
-        | round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    // extraction-facet oracles: the full span sequences / flags / rejects
-    // reconstructed as DuckDB arithmetic over the same documents table
-    // (see OracleSql docSynthCte) — the engine's convert stage is now
-    // hash-gated, not rows-only
-    "x_rejects" -> OracleSql.xRejects,
-    "x_discoveries_core" -> OracleSql.xDiscoveriesCore,
-    "x_entity_edges_core" -> OracleSql.xEntityEdgesCore,
-    "x_mention_context_core" -> OracleSql.xMentionContextCore,
-    "x_disambig_core" -> OracleSql.xDisambigCore,
-    "x_disambig_global" -> OracleSql.xDisambigGlobal,
-    "x_discovery_learn_core" -> OracleSql.xDiscoveryLearnCore,
-    "x_office_spans" -> OracleSql.xOfficeSpans,
-    "x_csv_spans" -> OracleSql.xCsvSpans,
-    "x_fallback_spans" -> OracleSql.xFallbackSpans,
-    "x_office_entities" -> OracleSql.xOfficeEntities,
-    "x_office_facts" -> OracleSql.xOfficeFacts,
-    "x_classify" -> OracleSql.xClassify,
-    "x_keywords" -> OracleSql.xKeywords,
-    "x_tags_meta" -> OracleSql.xTagsMeta,
-    "x_domain_entities" -> OracleSql.xDomainEntities,
-    "x_entities_core" -> OracleSql.xEntitiesCore,
-    "x_big_entities_core" -> OracleSql.xEntitiesCore,
-    "x_big_canonical_core" -> OracleSql.xCanonicalCore,
-    "x_facts_core" -> OracleSql.xFactsCore,
-    "x_typed_facts_core" -> OracleSql.xTypedFactsCore,
-    "x_canonical_core" -> OracleSql.xCanonicalCore,
-    "x_normalized_core" -> OracleSql.xNormalizedCore,
-    "x_global_core" -> OracleSql.xGlobalCore,
-    "x_fact_summary_core" -> OracleSql.xFactSummaryCore,
-    "x_knowledge_core" -> OracleSql.xKnowledgeCore,
-    "x_markdown_core" -> OracleSql.xMarkdownCore,
-    "x_text_spans" -> OracleSql.xTextSpans,
-    "x_content_flags" -> OracleSql.xContentFlags,
-    "x_pdf_spans" -> OracleSql.xPdfSpans,
-    "x_html_spans" -> OracleSql.xHtmlSpans,
-    "x_stream_spans" -> OracleSql.xStreamSpans,
-    // the streamed entity facet must equal the batch facet — same oracle
-    "x_stream_entities" -> OracleSql.xEntitiesCore,
-    "t1_token_count" -> OracleSql.tokenCount,
-    "t2_quality_score" -> OracleSql.qualityScore,
-    "t3_lang_id" -> OracleSql.langId,
-    "t4_fingerprint" -> OracleSql.fingerprint,
-    "t5_dedup_exact" -> OracleSql.dedupExact,
-    "t6_ngram_jaccard" -> OracleSql.ngramJaccard(0.2),
-    "t7_minhash_lsh" -> OracleSql.minhashLsh(0.5),
-    "t8_simhash" -> OracleSql.simhash,
-    "t10_dup_groups" -> OracleSql.dupGroups(0.5),
-    "t11_corpus_select" -> OracleSql.corpusSelect(0.5, 0.5),
-    "t12_lsh_recall" -> OracleSql.lshRecall(0.5),
-    "t13_rolling_fp" -> OracleSql.rollingFingerprint,
-    "t14_simhash_dedup" -> OracleSql.simhashDedup(graft.textops.TextOps.HammingMax),
-    "t15_simhash_groups" -> OracleSql.simhashGroups(graft.textops.TextOps.HammingMax),
-    "t16_contamination" -> OracleSql.contamination(graft.textops.TextOps.ContaminationThreshold),
-    "t17_token_budget" -> OracleSql.tokenBudget,
-    "t18_curation_funnel" -> OracleSql.curationFunnel(0.5, 0.5,
-      graft.textops.TextOps.ContaminationThreshold),
-    "t19_stream_dedup" -> OracleSql.streamDedup,
-    "t20_stream_dedup_bounded" -> OracleSql.streamDedupBounded,
-    "t21_repetition" -> OracleSql.repetition,
-    "m1_media_stats" -> OracleSql.mediaStats,
-    "m2_image_meta" -> OracleSql.imageMeta,
-    "m3_frame_sample" -> OracleSql.frameSample,
-    "m4_resize_plan" -> OracleSql.resizePlan,
-    "m5_audio_features" -> OracleSql.audioFeatures,
-    "s1_cosine_topk" -> OracleSql.cosineTopK(10, 5),
-    "s2_lsh_topk" -> OracleSql.lshTopK(10, 5),
-    "s3_label_centroids" -> OracleSql.labelCentroids,
-    "s4_ivf_topk" -> OracleSql.ivfTopK(10, 5),
-    "s6_ivf_recall" -> OracleSql.ivfRecall(10, 5),
-    "s8_ivf_recall_clustered" -> OracleSql.ivfRecallClustered(10, 5),
-    "s9_quantize_int8" -> OracleSql.quantizeInt8,
-    "s7_lsh_ann_recall" -> OracleSql.lshAnnRecall(10, 5),
-    "t9_embedding_dedup" -> OracleSql.embeddingDedup(0.40),
-    "s5_embedding_groups" -> OracleSql.embeddingGroups(0.40)
+        |ORDER BY user_id, n_events, duration_s""".stripMargin)((s, dir) =>
+      graft.streaming.EventStream.sessionizeReplay(
+        s, s.read.parquet(s"$dir/events.parquet"))),
+
+    // ---- training-data text ops
+    gated("t1_token_count", OracleSql.tokenCount)((s, dir) =>
+      graft.textops.TextOps.tokenCount(s, dir)),
+    gated("t2_quality_score", OracleSql.qualityScore)((s, dir) =>
+      graft.textops.TextOps.qualityScore(s, dir)),
+    gated("t3_lang_id", OracleSql.langId)((s, dir) =>
+      graft.textops.TextOps.langId(s, dir)),
+    gated("t4_fingerprint", OracleSql.fingerprint)((s, dir) =>
+      graft.textops.TextOps.fingerprint(s, dir)),
+    gated("t5_dedup_exact", OracleSql.dedupExact)((s, dir) =>
+      graft.textops.TextOps.dedupExact(s, dir)),
+    gated("t6_ngram_jaccard", OracleSql.ngramJaccard(0.2))((s, dir) =>
+      graft.textops.TextOps.ngramJaccard(s, dir, 0.2)),
+    gated("t7_minhash_lsh", OracleSql.minhashLsh(0.5))((s, dir) =>
+      graft.textops.TextOps.minhashLsh(s, dir, 0.5)),
+    gated("t8_simhash", OracleSql.simhash)((s, dir) =>
+      graft.textops.TextOps.simhash(s, dir)),
+    gated("t10_dup_groups", OracleSql.dupGroups(0.5))((s, dir) =>
+      graft.textops.TextOps.dupGroups(s, dir)),
+    gated("t11_corpus_select", OracleSql.corpusSelect(0.5, 0.5))((s, dir) =>
+      graft.textops.TextOps.corpusSelect(s, dir)),
+    gated("t12_lsh_recall", OracleSql.lshRecall(0.5))((s, dir) =>
+      graft.textops.TextOps.lshRecall(s, dir)),
+    gated("t13_rolling_fp", OracleSql.rollingFingerprint)((s, dir) =>
+      graft.textops.TextOps.rollingFingerprint(s, dir)),
+    gated("t14_simhash_dedup", OracleSql.simhashDedup(graft.textops.TextOps.HammingMax))((s, dir) =>
+      graft.textops.TextOps.simhashDedup(s, dir)),
+    gated("t15_simhash_groups", OracleSql.simhashGroups(graft.textops.TextOps.HammingMax))((s, dir) =>
+      graft.textops.TextOps.simhashGroups(s, dir)),
+    // benchmark decontamination: n-gram membership of each train doc's
+    // shingles in the held-out slice's vocabulary (doc_id % 10 == 0)
+    gated("t16_contamination",
+      OracleSql.contamination(graft.textops.TextOps.ContaminationThreshold))((s, dir) =>
+      graft.textops.TextOps.contamination(s, dir)),
+    // token-budget language balancing: deterministic hash-threshold
+    // down-sampling of dominant languages to an adaptive budget
+    gated("t17_token_budget", OracleSql.tokenBudget)((s, dir) =>
+      graft.textops.TextOps.tokenBudget(s, dir)),
+    // the composed end-to-end curation decision: quality + dedup +
+    // decontamination + balancing, every flag re-derived by the oracle
+    gated("t18_curation_funnel", OracleSql.curationFunnel(0.5, 0.5,
+      graft.textops.TextOps.ContaminationThreshold))((s, dir) =>
+      graft.textops.TextOps.curationFunnel(s, dir)),
+    // dedup at ingest: the streamed keeper table must equal the batch
+    // group-by — min/count are arrival-order-insensitive, so the
+    // complete-mode sink state is deterministic
+    gated("t19_stream_dedup", OracleSql.streamDedup)((s, dir) =>
+      graft.streaming.StreamDedup.dedupReplay(s, graft.textops.TextOps.docs(s, dir))),
+    // the production state-BOUNDED variant: watermark horizon evicts
+    // fingerprint state — in-horizon dup dropped, beyond-horizon dup
+    // re-admitted; the emission-count vector gates both sides
+    gated("t20_stream_dedup_bounded", OracleSql.streamDedupBounded)((s, dir) =>
+      graft.streaming.StreamDedup.boundedReplay(s, graft.textops.TextOps.docs(s, dir))),
+    // Gopher-style within-document repetition signals: the curation
+    // filter exact/near dedup cannot see (document-local, one scan)
+    gated("t21_repetition", OracleSql.repetition)((s, dir) =>
+      graft.textops.TextOps.repetition(s, dir)),
+
+    // ---- multimodal media columns (binary payloads)
+    gated("m1_media_stats", OracleSql.mediaStats)((s, dir) =>
+      graft.media.MediaOps.mediaStats(s, dir)),
+    gated("m2_image_meta", OracleSql.imageMeta)((s, dir) =>
+      graft.media.MediaOps.imageMeta(s, dir)),
+    gated("m3_frame_sample", OracleSql.frameSample)((s, dir) =>
+      graft.media.MediaOps.frameSample(s, dir)),
+    gated("m4_resize_plan", OracleSql.resizePlan)((s, dir) =>
+      graft.media.MediaOps.resizePlan(s, dir)),
+    gated("m5_audio_features", OracleSql.audioFeatures)((s, dir) =>
+      graft.media.MediaOps.audioFeatures(s, dir)),
+
+    // ---- similarity search over embeddings
+    gated("s1_cosine_topk", OracleSql.cosineTopK(10, 5))((s, dir) =>
+      graft.sim.Similarity.cosineTopK(s, dir, 10, 5)),
+    gated("s2_lsh_topk", OracleSql.lshTopK(10, 5))((s, dir) =>
+      graft.sim.Similarity.lshTopK(s, dir, 10, 5)),
+    gated("s3_label_centroids", OracleSql.labelCentroids)((s, dir) =>
+      graft.sim.Similarity.labelCentroids(s, dir)),
+    gated("s4_ivf_topk", OracleSql.ivfTopK(10, 5))((s, dir) =>
+      graft.sim.Similarity.ivfTopK(s, dir, 10, 5)),
+    gated("s6_ivf_recall", OracleSql.ivfRecall(10, 5))((s, dir) =>
+      graft.sim.Similarity.ivfRecall(s, dir, 10, 5)),
+    // the same measurement on the label-correlated clustered family:
+    // recall at fixed nprobe as a function of cluster purity (s6's
+    // near-uniform corpus is the probed-mass worst case)
+    gated("s8_ivf_recall_clustered", OracleSql.ivfRecallClustered(10, 5))((s, dir) =>
+      graft.sim.Similarity.ivfRecallClustered(s, dir, 10, 5)),
+    // int8 quantization with MEASURED reconstruction quality — the
+    // vector-payload memory-footprint path (codes 4x smaller; exact
+    // re-rank stays on the originals)
+    gated("s9_quantize_int8", OracleSql.quantizeInt8)((s, dir) =>
+      graft.sim.Similarity.quantizeInt8(s, dir)),
+    gated("s7_lsh_ann_recall", OracleSql.lshAnnRecall(10, 5))((s, dir) =>
+      graft.sim.Similarity.lshAnnRecall(s, dir, 10, 5)),
+    gated("t9_embedding_dedup", OracleSql.embeddingDedup(0.40))((s, dir) =>
+      graft.sim.Similarity.embeddingDedup(s, dir, 0.40)),
+    gated("s5_embedding_groups", OracleSql.embeddingGroups(0.40))((s, dir) =>
+      graft.sim.Similarity.embeddingGroups(s, dir, 0.40))
   )
 }

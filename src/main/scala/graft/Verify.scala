@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,29 +10,25 @@ object Verify {
     // dev convenience: extra args restrict the dump to the named queries
     // (the driver always calls with exactly two args → full dump)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSpark.session()
     // the oracle SQL is generated from the BUILT-IN corpus constants — a
     // prior install() in this JVM would silently invalidate every
     // extraction-facet oracle, so normalize before dumping
     graft.matching.Corpora.reset()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.queries.filter(q => only.isEmpty || only(q.name)).foreach { q =>
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.queries))
+    spark.stop()
+  }
+
+  /** The name → oracle SQL JSON object of every gated query. */
+  def oracleJson(queries: Seq[SparkEntry.Query]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -46,9 +41,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    queries.collect { case SparkEntry.Query(name, _, Some(sql)) => s"${q(name)}: ${q(sql)}" }
+      .mkString("{", ",", "}")
   }
 }

@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: IVF recall/precision vs the s1 brute-force truth across
   * an nprobe sweep — the probe/recall trade-off table documented in
   * README. The driver-gated s6 query pins nprobe at the production
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object IvfSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // size from the env like Bench/Verify — a hardcoded local[32] on a
-    // smaller (or pinned) host would print scheduling noise as topk cost
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSpark.session()
     try {
       for (nProbe <- Seq(1, 2, 4)) {
         val row = graft.sim.Similarity.ivfRecall(spark, sfDir, nProbe = nProbe).head()

@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints `explain("formatted")` for representative queries so plan
   * shape (PushedFilters, ReadSchema pruning, broadcast vs shuffle joins,
   * WholeStageCodegen spans) can be audited against the 100 TB design
@@ -25,15 +23,10 @@ object PlanAudit {
       // round-4 ops: t16 must be a semi-join + aggs (no pair join),
       // t17 must broadcast the tiny budgets frame
       "t16_contamination", "t17_token_budget")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
-      println(s"\n==================== $name ====================")
-      fn(spark, sfDir).explain("formatted")
+    val spark = graft.util.LocalSpark.session()
+    graft.SparkEntry.queries.filter(q => names(q.name)).foreach { q =>
+      println(s"\n==================== ${q.name} ====================")
+      q.build(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -146,22 +146,17 @@ object ExtractionPipeline {
       pmod(hash(col("doc_id")), lit(salts)))
   }
 
-  /** Full job: raw docs → extracted docs, fused + salted. Pass
-    * salt = false when the caller has already balanced the input (e.g.
-    * a pre-synthesis salted repartition of small rows — cheaper than
-    * re-shuffling full payloads here).
-    */
+  /** Full job: raw docs → extracted docs, fused + salted. */
   def run(spark: SparkSession, raw: Dataset[RawDoc], partitions: Int = 0,
-      salt: Boolean = true, config: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] = {
+      config: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] = {
     import spark.implicits._
     val p = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
-    val balanced = if (salt) salted(raw, p) else raw
     // ship the driver's active corpus bundle (built-in or table-loaded)
     // to every executor: one broadcast, an idempotent install per JVM
     // per version at partition start (no-op when already current)
     val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
       spark, graft.matching.Corpora.bundle)
-    balanced.mapPartitions { it => installCorpus(); it.map(processDoc(_, config)) }
+    salted(raw, p).mapPartitions { it => installCorpus(); it.map(processDoc(_, config)) }
   }
 
   /** Corpus-level metrics via `observe()` — the Spark counterpart of the
@@ -177,31 +172,5 @@ object ExtractionPipeline {
       sum(when(!col("success"), 1L).otherwise(0L)).as("rejects"),
       sum(size(col("spans"))).as("spans"),
       sum(size(col("entities"))).as("entities"))
-  }
-
-  /** Throughput-measurement variant: run the fused stage and fold
-    * (docs, pages) INSIDE the same mapPartitions, so no ExtractedDoc is
-    * serialized to rows just to be counted. Production serializes once —
-    * into the sink; a count-after-Dataset would pay serialize +
-    * deserialize per doc, an artifact the bench must not measure.
-    */
-  def runCounting(spark: SparkSession, raw: Dataset[RawDoc], partitions: Int = 0,
-      salt: Boolean = true): (Long, Long) = {
-    import spark.implicits._
-    val p = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
-    val balanced = if (salt) salted(raw, p) else raw
-    val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
-      spark, graft.matching.Corpora.bundle)
-    balanced.mapPartitions { it =>
-      installCorpus()
-      var docs = 0L
-      var pages = 0L
-      it.foreach { r =>
-        val d = processDoc(r)
-        docs += 1
-        pages += d.meta.page_count
-      }
-      Iterator.single((docs, pages))
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Relational / scale-pattern operator coverage over the TPC-H-ish
-  * tables. Each query has a DuckDB oracle (SparkEntry.oracleSql); the
+  * tables. Each query has a DuckDB oracle (SparkEntry.queries); the
   * interesting part here is the PHYSICAL shape at 100 TB:
   *
   *  - as-of join via union + running last_value — one shuffle on the key,

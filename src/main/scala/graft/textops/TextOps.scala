@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * same plan survives a 100× scale-up.
   *
   * Each formula is chosen to be expressible identically in DuckDB SQL so
-  * the driver can hash-verify results (see SparkEntry.oracleSql).
+  * the driver can hash-verify results (see the oracles in SparkEntry.queries).
   */
 object TextOps {
 
@@ -615,8 +615,6 @@ object TextOps {
       changed = !next.where(col("chg")).isEmpty
       labels = next.select("doc_id", "label")
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $rounds changed=$changed ${System.nanoTime() / 1000000}ms")
     }
     // a correctness-gated operator must fail loudly, never return
     // silently split groups (unreachable below 2^25-diameter components)
