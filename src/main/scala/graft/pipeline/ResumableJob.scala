@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.model.{ExtractedDoc, RawDoc}
 import graft.sources.Storage
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Checkpoint/resume with per-partition lineage (the north rule's
@@ -34,17 +34,25 @@ object ResumableJob {
 
   def bucketOf(buckets: Int) = pmod(hash(col("doc_id")), lit(buckets))
 
-  /** Buckets already completed for this snapshot (empty on first run). */
+  /** Buckets already completed for this snapshot. Empty when no lineage
+    * has been committed yet: the path is missing (first run) or holds no
+    * data file (a kill during the first append leaves only its
+    * `_temporary` dir). Any other read failure, such as a corrupt
+    * lineage file, propagates — it must never read as "nothing done"
+    * and silently recompute every bucket.
+    */
   def completedBuckets(spark: SparkSession, outDir: String, snapshot: String,
       storage: Storage = Storage.default): Set[Int] = {
-    val path = s"$outDir/lineage"
     try {
-      storage.read(spark, path)
+      storage.read(spark, s"$outDir/lineage")
         .filter(col("source_snapshot") === snapshot)
         .select("bucket").distinct()
         .collect().map(_.getInt(0)).toSet
-    } catch { case _: Exception => Set.empty }
+    } catch { case e: AnalysisException if NoLineage(e.getCondition) => Set.empty }
   }
+
+  /** Read-failure conditions that mean no lineage was ever committed. */
+  private val NoLineage = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
   /** Process + write only the buckets not yet recorded in lineage.
     * Returns the number of buckets (re)computed.
@@ -72,6 +80,9 @@ object ResumableJob {
       // (Iceberg binding: writeTo(...).overwritePartitions() — same call)
       storage.overwritePartitions(extracted.toDF(), s"$outDir/data", "bucket")
 
+      // at most `buckets` rows: aggregate the cached wave once and append
+      // the collected rows as one file (each extra lineage file is one
+      // more footer for completedBuckets to read)
       val lineage = extracted.groupBy(col("bucket"))
         .agg(
           count(lit(1)).as("doc_count"),
@@ -79,9 +90,9 @@ object ResumableJob {
           sum(when(!col("success"), 1L).otherwise(0L)).as("fail_count"))
         .withColumn("source_snapshot", lit(snapshot))
         .as[LineageRow]
-      val nBuckets = lineage.count().toInt
-      storage.append(lineage.toDF(), s"$outDir/lineage")
-      nBuckets
+        .collect()
+      storage.append(lineage.toSeq.toDS().coalesce(1).toDF(), s"$outDir/lineage")
+      lineage.length
     } finally extracted.unpersist()
   }
 

@@ -192,21 +192,29 @@ object Similarity {
       .sortBy(_._1)
 
   /** Embedding-cosine near-duplicate detection: candidate pairs from the
-    * multi-table LSH layout (no O(n²) scan), verified with exact cosine,
-    * kept at ≥ threshold. The dedup twin of lshTopK — at 10^9 vectors
-    * this is the "collapse same-content embeddings" pass of a training
-    * pipeline.
-    */
-  /** Verified pairs persisted per (session, dir, threshold): t9 and the
-    * s5 grouping share one bucket-join + cosine computation.
+    * multi-table LSH layout (no O(n²) scan; each hash table is one band
+    * of TextOps.bandedPairs), verified with exact cosine, kept at ≥
+    * threshold. The dedup twin of lshTopK — at 10^9 vectors this is the
+    * "collapse same-content embeddings" pass of a training pipeline.
+    * Verified pairs are memoized per (session, dir, threshold): t9 and
+    * the s5 grouping share one bucket-join + cosine computation.
     */
   private val dedupPairCache = new graft.util.SessionCache[DataFrame]
 
   def embeddingDedup(s: SparkSession, dir: String, threshold: Double = 0.40): DataFrame =
     dedupPairCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      // localCheckpoint: truncate the bucket/cosine lineage so consumer
-      // plans (t9 dump, s5 components) stay leaf-sized
-      embeddingDedupUncached(s, dir, threshold).localCheckpoint()
+      graft.functions.GraftFunctions.ensureRegistered(s)
+      val emb = embeddings(s, dir)
+      // exact-dedup-first: byte-equal embeddings collapse before bucket
+      // pairing, via the fingerprint-keyed keeper selection
+      val bands = lshBuckets(s, dir).join(exactKeepers(emb), Seq("vec_id"), "left_semi")
+        .select(col("vec_id").as("id"), col("tbl").as("band"), col("bucket").as("key"))
+      graft.textops.TextOps.bandedPairs(bands, MaxSignBucket, "t9")(_
+        .join(emb.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
+        .join(emb.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
+        .withColumn("cos", round(cosine("ea", "eb"), 4))
+        .filter(col("cos") >= threshold)
+        .select(col("a"), col("b"), col("cos")))
     }
 
   /** Max vectors per sign-LSH bucket for the dedup pair join — the
@@ -242,37 +250,6 @@ object Similarity {
       .agg(min(col("vec_id")).as("vec_id"))
       .select("vec_id")
 
-  private def embeddingDedupUncached(s: SparkSession, dir: String, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val emb = embeddings(s, dir)
-    // exact-dedup-first: byte-equal embeddings collapse before bucket
-    // pairing, via the fingerprint-keyed keeper selection
-    val keepers = exactKeepers(emb)
-    val buckets = lshBuckets(s, dir)
-      .join(keepers, Seq("vec_id"), "left_semi")
-    val bsz = buckets.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-    val nDropped = bsz.filter(col("bsz") > MaxSignBucket).count()
-    if (nDropped > 0)
-      System.err.println(
-        s"[graft] t9: dropped $nDropped sign buckets over cap $MaxSignBucket from candidate generation")
-    val bucketsOk = buckets.join(
-      bsz.filter(col("bsz") <= MaxSignBucket).select("tbl", "bucket"),
-      Seq("tbl", "bucket"), "left_semi")
-    val pairs = bucketsOk.as("x")
-      .join(bucketsOk.as("y"),
-        col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
-      .distinct()
-    pairs
-      .join(emb.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-      .join(emb.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .withColumn("cos", round(cosine("ea", "eb"), 4))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), col("cos"))
-      .orderBy(col("a"), col("b"))
-  }
-
   /** s5: embedding near-dup GROUPS — connected components over the
     * cosine-verified pairs (same pointer-doubling loop as the text-side
     * t10), one keeper id per cluster of same-content embeddings.
@@ -282,13 +259,8 @@ object Similarity {
 
   def embeddingGroups(s: SparkSession, dir: String, threshold: Double = 0.40): DataFrame =
     embGroupCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      val pairs = embeddingDedup(s, dir, threshold).select(col("a"), col("b"))
-      val comp = graft.textops.TextOps.connectedComponents(pairs)
-      val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
-      comp.join(sizes, "label")
-        .select(col("doc_id").as("vec_id"), col("label").as("group_id"), col("group_size"))
-        .orderBy("vec_id")
-        .localCheckpoint()
+      graft.textops.TextOps.componentGroups(embeddingDedup(s, dir, threshold))
+        .withColumnRenamed("doc_id", "vec_id")
     }
 
   /** Mixed-type cosine (float[] column vs literal double[] centroid) as

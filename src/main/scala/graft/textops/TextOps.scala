@@ -56,6 +56,11 @@ object TextOps {
   private def wsTokenCount: Column =
     size(expr(s"regexp_extract_all(text, '${WsTokenRegex.replace("\\", "\\\\")}', 0)")).cast("long")
 
+  /** Lowercase `[a-z]+` word tokens of `text` — the one word-token rule
+    * the shingle, SimHash and per-doc count/quality/language ops share.
+    */
+  private def wordTokens: Column = expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+
   /** First 8 md5 hex chars of a column as a BIGINT — the portable
     * cross-engine hash (DuckDB: `('0x' || substr(md5(x),1,8))::BIGINT`)
     * shared by the minhash, rolling-fingerprint and budget-bucket ops.
@@ -68,7 +73,7 @@ object TextOps {
     docs(s, dir).select(
       col("doc_id"),
       wsTokenCount.as("n_ws_tokens"),
-      size(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).cast("long").as("n_word_tokens"),
+      size(wordTokens).cast("long").as("n_word_tokens"),
       size(regexp_extract_all(lower(col("text")), lit(BpeishPattern), lit(0)))
         .cast("long").as("n_bpe_tokens"))
       .orderBy("doc_id")
@@ -84,7 +89,7 @@ object TextOps {
     */
   def qualityScore(s: SparkSession, dir: String): DataFrame = {
     docs(s, dir)
-      .withColumn("toks", expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
+      .withColumn("toks", wordTokens)
       .withColumn("n_tokens", size(col("toks")).cast("long"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .withColumn("punct_len",
@@ -117,10 +122,8 @@ object TextOps {
     * en < es < de < fr < zh (first max wins).
     */
   def langId(s: SparkSession, dir: String): DataFrame = {
-    def hits(lang: String): Column = {
-      val lst = langStopwords(lang).map(w => s"'$w'").mkString(", ")
-      size(expr(s"filter(regexp_extract_all(lower(text), '[a-z]+', 0), t -> t IN ($lst))")).cast("long")
-    }
+    def hits(lang: String): Column =
+      size(filter(wordTokens, _.isin(langStopwords(lang): _*))).cast("long")
     docs(s, dir)
       .withColumn("s_en", hits("en"))
       .withColumn("s_es", hits("es"))
@@ -189,7 +192,7 @@ object TextOps {
   def shingles(s: SparkSession, dir: String): DataFrame =
     shingleCache.getOrElseUpdate(s, dir)({
       val df = docs(s, dir)
-        .select(col("doc_id"), expr("regexp_extract_all(lower(text), '[a-z]+', 0)").as("t"))
+        .select(col("doc_id"), wordTokens.as("t"))
         .filter(size(col("t")) >= 3)
         .select(col("doc_id"), explode(expr(
           "transform(sequence(0, size(t)-3), " +
@@ -439,13 +442,11 @@ object TextOps {
     docs(s, dir).select(col("doc_id"), fingerprintCol.as("fp"))
       .groupBy("fp").agg(min("doc_id").as("doc_id")).select("doc_id")
 
-  /** Max docs per LSH band bucket. A degenerate hot bucket (boilerplate
-    * or near-empty docs whose signatures collide) pairs quadratically
-    * inside the bucket, re-creating the blowup LSH exists to avoid —
-    * production pipelines drop such buckets (their contents are exactly
-    * the junk dedup is trying to kill) and log the count (no silent
-    * caps). Mirrored in OracleSql.minhashLsh; bounded pair cost:
-    * Σ min(bucket, cap)² per (band, hash).
+  /** Max docs per MinHash (t7) and SimHash (t14) band bucket — the
+    * hot-bucket cap bandedPairs applies. Production pipelines drop such
+    * buckets: their contents are exactly the junk dedup is trying to
+    * kill. Mirrored in OracleSql.minhashLsh/simhashDedup; bounded pair
+    * cost: Σ min(bucket, cap)² per (band, key).
     */
   val MaxBandBucket = 1000
 
@@ -453,80 +454,91 @@ object TextOps {
     * by band hash, equi-join buckets for candidates, verify candidates
     * with true Jaccard, keep ≥ threshold. The scale path: candidate
     * generation is O(collisions), not O(n²). Exact dups are collapsed
-    * first and over-cap buckets dropped (see exactKeepers/MaxBandBucket).
-    */
-  /** Verified LSH pairs persisted per (session, dir, threshold): t7,
-    * t10 and t11 all consume them — one signature+verify computation.
+    * first and over-cap buckets dropped (see exactKeepers/bandedPairs).
+    * Verified pairs are memoized per (session, dir, threshold): t7, t10
+    * and t11 all consume them — one signature+verify computation.
     */
   private val lshPairCache = new graft.util.SessionCache[DataFrame]
 
   def minhashLsh(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
     lshPairCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      // the builder checkpoints its own result (lineage truncation, same
-      // reason as ngramJaccard above) so it can release its intermediate
-      // band/candidate caches once the pairs are materialized
-      minhashLshUncached(s, dir, threshold)
+      // one shingle computation feeds BOTH the signatures and the verify
+      // stage (persisted by the shingles() memo); candidates are tiny
+      val shk = shingles(s, dir).join(exactKeepers(s, dir), Seq("doc_id"), "left_semi")
+      val sig = minhashSignaturesFrom(shk)
+      val r = NumHashes / NumBands
+      val bands = (0 until NumBands).map { b =>
+        val cols = (b * r until (b + 1) * r).map(i => col(s"m$i"))
+        sig.select(col("doc_id").as("id"), lit(b).as("band"),
+          md5(concat_ws(",", cols: _*)).as("key"))
+      }.reduce(_.unionByName(_))
+      // verify candidates with exact Jaccard computed per candidate PAIR:
+      // collect each candidate doc's shingle set (bounded by its own
+      // shingle count) and intersect the two arrays per pair. This touches
+      // exactly |cand| pairs — a shingle self-join over candidate docs
+      // would instead materialize ALL shingle-sharing pairs among them,
+      // which in a near-dup-heavy corpus (the whole point of dedup)
+      // degenerates toward the all-pairs cost LSH exists to avoid.
+      bandedPairs(bands, MaxBandBucket, "t7") { cand =>
+        val candDocs = cand.select(col("a").as("doc_id"))
+          .unionByName(cand.select(col("b").as("doc_id"))).distinct()
+        val sets = shk.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
+          .groupBy("doc_id").agg(collect_set(col("sh")).as("shs"))
+        cand
+          .join(sets.select(col("doc_id").as("a"), col("shs").as("sa")), Seq("a"))
+          .join(sets.select(col("doc_id").as("b"), col("shs").as("sb")), Seq("b"))
+          .withColumn("i", size(array_intersect(col("sa"), col("sb"))).cast("long"))
+          .withColumn("jaccard", round(col("i").cast("double") /
+            (size(col("sa")) + size(col("sb")) - col("i")), 4))
+          .filter(col("jaccard") >= threshold)
+          .select("a", "b", "jaccard")
+      }
     }
 
-  private def minhashLshUncached(s: SparkSession, dir: String, threshold: Double): DataFrame = {
-    // one shingle computation feeds BOTH the signatures and the verify
-    // stage (persisted by the shingles() memo); candidates are tiny
-    val sh0 = shingles(s, dir)
-    val shk = sh0.join(exactKeepers(s, dir), Seq("doc_id"), "left_semi")
-    val sig = minhashSignaturesFrom(shk)
-    val r = NumHashes / NumBands
-    val bands = (0 until NumBands).map { b =>
-      val cols = (b * r until (b + 1) * r).map(i => col(s"m$i"))
-      sig.select(col("doc_id"), lit(b).as("band"),
-        md5(concat_ws(",", cols: _*)).as("bh"))
-    }.reduce(_.unionByName(_))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // bucket-size gate: count each (band, hash) bucket, drop over-cap
-    // buckets from pairing, and LOG the drop — never truncate silently
-    val bsz = bands.groupBy("band", "bh").agg(count(lit(1)).as("bsz"))
-    val nDropped = bsz.filter(col("bsz") > MaxBandBucket).count()
+  // ------------------------------------------------ near-dup operators
+
+  /** The banded self-join every near-dup family shares (t7 MinHash, t14
+    * SimHash, t9 sign-LSH): `bands` is the family's keeper-filtered band
+    * frame as `(id, band, key)`, one row per (id, band). Ids sharing a
+    * (band, key) bucket become candidates `(a, b)` with a < b, which
+    * `verify` filters and annotates; the verified pairs come back
+    * ordered by (a, b) and checkpointed (eager, lineage truncated).
+    *
+    * Hot-bucket cap: a bucket of n ids pairs n(n-1)/2 ways, so one
+    * degenerate bucket (boilerplate or near-empty docs whose signatures
+    * collide) re-creates the all-pairs blowup LSH exists to avoid.
+    * Buckets over `cap` are dropped from pairing and the drop is LOGGED
+    * under the family `tag` — never truncated silently. The
+    * pre-distinct candidate count is Σ n_b(n_b-1)/2 over the kept
+    * buckets.
+    *
+    * The band frame is persisted (the bucket count and the self-join
+    * both read it) and the candidates cached (a verify may read them
+    * twice); neither has a reader once the pairs are checkpointed, so
+    * both are released then instead of pinning storage memory for the
+    * session lifetime (one leak per memo key).
+    */
+  private[graft] def bandedPairs(bands: DataFrame, cap: Int, tag: String)(
+      verify: DataFrame => DataFrame): DataFrame = {
+    bands.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bsz = bands.groupBy("band", "key").agg(count(lit(1)).as("bsz"))
+    val nDropped = bsz.filter(col("bsz") > cap).count()
     if (nDropped > 0)
       System.err.println(
-        s"[graft] t7: dropped $nDropped band buckets over cap $MaxBandBucket from candidate generation")
-    val bandsOk = bands.join(
-      bsz.filter(col("bsz") <= MaxBandBucket).select("band", "bh"),
-      Seq("band", "bh"), "left_semi")
-    val cand = bandsOk.as("x").join(bandsOk.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+        s"[graft] $tag: dropped $nDropped band buckets over cap $cap from candidate generation")
+    val kept = bands.join(
+      bsz.filter(col("bsz") <= cap).select("band", "key"), Seq("band", "key"), "left_semi")
+    val cand = kept.as("x").join(kept.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+        col("x.id") < col("y.id"))
+      .select(col("x.id").as("a"), col("y.id").as("b"))
       .distinct()
       .cache()
-    // verify candidates with exact Jaccard computed per candidate PAIR:
-    // collect each candidate doc's shingle set (bounded by its own
-    // shingle count) and intersect the two arrays per pair. This touches
-    // exactly |cand| pairs — a shingle self-join over candidate docs
-    // would instead materialize ALL shingle-sharing pairs among them,
-    // which in a near-dup-heavy corpus (the whole point of dedup)
-    // degenerates toward the all-pairs cost LSH exists to avoid.
-    val candDocs = cand.select(col("a").as("doc_id"))
-      .unionByName(cand.select(col("b").as("doc_id"))).distinct()
-    val sets = shk.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("sh")).as("shs"))
-    val out = cand
-      .join(sets.select(col("doc_id").as("a"), col("shs").as("sa")), Seq("a"))
-      .join(sets.select(col("doc_id").as("b"), col("shs").as("sb")), Seq("b"))
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard", round(col("i").cast("double") /
-        (size(col("sa")) + size(col("sb")) - col("i")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
-      .orderBy("a", "b")
-      .localCheckpoint() // eager: pairs materialize NOW, lineage truncated
-    // the band/candidate caches have zero readers once the pairs are
-    // checkpointed — release them instead of pinning storage memory for
-    // the session lifetime (one leak per (dir, threshold) memo key)
+    val out = verify(cand).orderBy("a", "b").localCheckpoint()
     bands.unpersist(false)
     cand.unpersist(false)
     out
   }
-
-  // --------------------------------------------------------- dup groups
 
   /** Connected components over near-dup pairs — dedup needs GROUPS (one
     * keeper per component), not pairwise edges. Min-label propagation
@@ -622,22 +634,29 @@ object TextOps {
     labels
   }
 
-  /** t10: duplicate groups from the MinHash-LSH verified pairs: every
-    * doc in some near-dup pair, its component id (min doc id in the
-    * component) and the component size. Memoized per (session, dir,
-    * threshold) — t11's curation reuses the same components.
+  /** Near-dup GROUPS over verified pairs `(a, b, …)`: every id in some
+    * pair, its component id (the min id in the component) and the
+    * component size as `(doc_id, group_id, group_size)`, ordered by
+    * doc_id and checkpointed. t10, t15 and s5 each memoize one call.
+    */
+  private[graft] def componentGroups(pairs: DataFrame): DataFrame = {
+    val comp = connectedComponents(pairs)
+    val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
+    comp.join(sizes, "label")
+      .select(col("doc_id"), col("label").as("group_id"), col("group_size"))
+      .orderBy("doc_id")
+      .localCheckpoint()
+  }
+
+  /** t10: duplicate groups from the MinHash-LSH verified pairs. Memoized
+    * per (session, dir, threshold) — t11's curation reuses the same
+    * components.
     */
   private val dupGroupCache = new graft.util.SessionCache[DataFrame]
 
   def dupGroups(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
     dupGroupCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      val pairs = minhashLsh(s, dir, threshold).select("a", "b")
-      val comp = connectedComponents(pairs)
-      val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
-      comp.join(sizes, "label")
-        .select(col("doc_id"), col("label").as("group_id"), col("group_size"))
-        .orderBy("doc_id")
-        .localCheckpoint()
+      componentGroups(minhashLsh(s, dir, threshold))
     }
 
   // --------------------------------------------------------- lsh recall
@@ -735,7 +754,7 @@ object TextOps {
   private def simhashFrame(s: SparkSession, dir: String): DataFrame =
     simhashCache.getOrElseUpdate(s, dir) {
       val toks = docs(s, dir)
-        .select(col("doc_id"), explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("tok"))
+        .select(col("doc_id"), explode(wordTokens).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
         .withColumn("h1", expr("cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint)"))
         .withColumn("h2", expr("cast(conv(substring(md5(tok), 9, 8), 16, 10) as bigint)"))
@@ -775,51 +794,30 @@ object TextOps {
 
   /** t14: SimHash hamming-band near-dup — the third dedup family a
     * training pipeline runs alongside MinHash (t7) and embedding (t9)
-    * dedup, sharing their 100 TB shape: exact-dedup-first keepers, band
-    * bucket equi-join (candidates = O(collisions), never O(n²)), the
-    * same MaxBandBucket hot-bucket cap, then exact hamming verification
-    * on exactly |candidates| pairs via bit_count(xor).
+    * dedup, sharing their 100 TB shape through bandedPairs:
+    * exact-dedup-first keepers, band bucket equi-join (candidates =
+    * O(collisions), never O(n²)), the same MaxBandBucket hot-bucket cap,
+    * then exact hamming verification on exactly |candidates| pairs via
+    * bit_count(xor).
     */
   private val simhashPairCache = new graft.util.SessionCache[DataFrame]
 
   def simhashDedup(s: SparkSession, dir: String, maxHamming: Int = HammingMax): DataFrame =
     simhashPairCache.getOrElseUpdate(s, s"$dir#$maxHamming") {
-      simhashDedupUncached(s, dir, maxHamming)
+      val sh = simhashFrame(s, dir)
+      val shk = sh.join(exactKeepers(s, dir), Seq("doc_id"), "left_semi")
+      val bands = (0 until SimhashBands).map { b =>
+        shk.select(col("doc_id").as("id"), lit(b).as("band"),
+          shiftright(col("simhash"), b * SimhashBandBits)
+            .bitwiseAND(lit((1L << SimhashBandBits) - 1)).as("key"))
+      }.reduce(_.unionByName(_))
+      bandedPairs(bands, MaxBandBucket, "t14")(_
+        .join(sh.select(col("doc_id").as("a"), col("simhash").as("sa")), Seq("a"))
+        .join(sh.select(col("doc_id").as("b"), col("simhash").as("sb")), Seq("b"))
+        .withColumn("hamming", expr("bit_count(sa ^ sb)").cast("long"))
+        .filter(col("hamming") <= maxHamming)
+        .select("a", "b", "hamming"))
     }
-
-  private def simhashDedupUncached(s: SparkSession, dir: String, maxHamming: Int): DataFrame = {
-    val sh = simhashFrame(s, dir)
-    val shk = sh.join(exactKeepers(s, dir), Seq("doc_id"), "left_semi")
-    val bands = (0 until SimhashBands).map { b =>
-      shk.select(col("doc_id"), lit(b).as("band"),
-        shiftright(col("simhash"), b * SimhashBandBits)
-          .bitwiseAND(lit((1L << SimhashBandBits) - 1)).as("bv"))
-    }.reduce(_.unionByName(_))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bsz = bands.groupBy("band", "bv").agg(count(lit(1)).as("bsz"))
-    val nDropped = bsz.filter(col("bsz") > MaxBandBucket).count()
-    if (nDropped > 0)
-      System.err.println(
-        s"[graft] t14: dropped $nDropped simhash band buckets over cap $MaxBandBucket from candidate generation")
-    val bandsOk = bands.join(
-      bsz.filter(col("bsz") <= MaxBandBucket).select("band", "bv"),
-      Seq("band", "bv"), "left_semi")
-    val cand = bandsOk.as("x").join(bandsOk.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val out = cand
-      .join(sh.select(col("doc_id").as("a"), col("simhash").as("sa")), Seq("a"))
-      .join(sh.select(col("doc_id").as("b"), col("simhash").as("sb")), Seq("b"))
-      .withColumn("hamming", expr("bit_count(sa ^ sb)").cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a", "b", "hamming")
-      .orderBy("a", "b")
-      .localCheckpoint() // eager: pairs materialize NOW, lineage truncated
-    bands.unpersist(false)
-    out
-  }
 
   /** t15: duplicate groups over the hamming-verified pairs — the same
     * pointer-doubling components as t10, one keeper per cluster.
@@ -828,13 +826,7 @@ object TextOps {
 
   def simhashGroups(s: SparkSession, dir: String, maxHamming: Int = HammingMax): DataFrame =
     simhashGroupCache.getOrElseUpdate(s, s"$dir#$maxHamming") {
-      val pairs = simhashDedup(s, dir, maxHamming).select("a", "b")
-      val comp = connectedComponents(pairs)
-      val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
-      comp.join(sizes, "label")
-        .select(col("doc_id"), col("label").as("group_id"), col("group_size"))
-        .orderBy("doc_id")
-        .localCheckpoint()
+      componentGroups(simhashDedup(s, dir, maxHamming))
     }
 
   // ------------------------------------------ t21: n-gram repetition
@@ -853,9 +845,17 @@ object TextOps {
     * deterministic tie-break (count desc, gram asc), coverage fractions,
     * and the Gopher-threshold flag. Document-local map over the same
     * `[a-z]+` tokenization the shingle family uses — zero shuffle
-    * beyond the facet sort, so the 100 TB cost is one scan.
+    * beyond the facet sort, so the 100 TB cost is one scan. The per-doc
+    * frame is memoized + checkpointed per (session, dir): t18 composes
+    * it, and a session running t18 and t21 tokenizes once.
     */
-  def repetition(s: SparkSession, dir: String): DataFrame = {
+  private val repetitionCache = new graft.util.SessionCache[DataFrame]
+
+  def repetition(s: SparkSession, dir: String): DataFrame =
+    repetitionCache.getOrElseUpdate(s, dir)(repetitionUncached(s, dir).localCheckpoint())
+      .orderBy("doc_id")
+
+  private def repetitionUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val tokenRx = java.util.regex.Pattern.compile("[a-z]+")
     docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
@@ -890,6 +890,5 @@ object TextOps {
       }
       .toDF("doc_id", "n_tokens", "top_bigram", "bigram_frac",
         "top_trigram", "trigram_frac", "repetitive")
-      .orderBy("doc_id")
   }
 }

@@ -103,6 +103,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(ResumableJob.runResumable(spark, raw, tmp, buckets, "snap1") === 0)
   }
 
+  test("P2 resume: uncommitted lineage reads as nothing done; corrupt lineage fails the run") {
+    val buckets = 4
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lineage").toString
+    // a kill during the first append leaves a lineage dir with no data file
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp, "lineage", "_temporary", "0"))
+    assert(ResumableJob.completedBuckets(spark, tmp, "snap1") === Set.empty)
+    val raw = DocGen.rawDocs(spark, sfDir)
+    assert(ResumableJob.runResumable(spark, raw, tmp, buckets, "snap1") === buckets)
+    // overwrite one committed lineage file with garbage (and drop its
+    // checksum, so the read fails on the parquet bytes themselves)
+    val part = new java.io.File(tmp, "lineage").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    java.nio.file.Files.write(part.toPath, "not a parquet file".getBytes("UTF-8"))
+    new java.io.File(part.getParentFile, s".${part.getName}.crc").delete()
+    intercept[Exception](ResumableJob.runResumable(spark, raw, tmp, buckets, "snap1"))
+  }
+
   test("P3 observe: corpus metrics ride along with the job") {
     import org.apache.spark.sql.Observation
     val raw = DocGen.rawDocs(spark, sfDir)

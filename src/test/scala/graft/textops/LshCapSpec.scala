@@ -63,6 +63,18 @@ class LshCapSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"hot bucket over cap ${TextOps.MaxBandBucket} must be dropped from pairing")
   }
 
+  test("over-cap SimHash band bucket is dropped, not paired quadratically") {
+    val dir = tmp("simhash-hotbucket")
+    // the [a-z]+ tokenizer reads every doc as 300 x "w" plus "unique", so
+    // all 1100 SimHashes are equal (hamming 0) while no two docs are
+    // byte-identical (keepers keep all 1100): each 16-bit band holds one
+    // bucket of 1100 > MaxBandBucket docs -> dropped -> no candidates.
+    writeDocs(dir, (0 until 1100).map(i => s"$words unique$i"))
+    val pairs = TextOps.simhashDedup(spark, dir)
+    assert(pairs.count() === 0L,
+      s"SimHash band bucket over cap ${TextOps.MaxBandBucket} must be dropped from pairing")
+  }
+
   test("identical embeddings collapse to one keeper: zero dedup pairs") {
     import spark.implicits._
     val dir = tmp("emb-identical")
